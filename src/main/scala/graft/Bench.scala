@@ -1,20 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Args.run(
+      "Bench (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_QUERIES, " +
+        "SPARK_GRAFT_BENCH_REPEAT, SPARK_GRAFT_BENCH_OUT)", args) { _ =>
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Args.cpus(4)
     // the library's own session defaults (AQE, shuffle sizing, the
     // small-exchange coalescing floor, registered functions/rules) are
     // part of what is being measured — build through GraftSession
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.registerFunctions(spark)
-    GraftSession.registerOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    val spark = GraftSession.create(cpus)
     // Noop sink: materializes every output column and keeps ORDER BYs in
     // the plan (a bare count() would let Catalyst prune projections and
     // EliminateSorts drop the sorts — timing work the query never did).
@@ -67,7 +61,7 @@ object Bench {
     // the measurement itself (noop sink, interleaved passes, per-query
     // min) is unchanged, only the default pass count at low core
     // counts.
-    val lowCore = cpus.toIntOption.exists(_ <= 8)
+    val lowCore = cpus <= 8
     val repeat = repeatEnv.flatMap(_.trim.toIntOption) match {
       case Some(n) => n.max(1)
       case None =>

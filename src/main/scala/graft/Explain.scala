@@ -1,22 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection: `runMain graft.Explain <sfDir> <name>...` prints the
   * formatted physical plan per query — the review loop for pushdown /
   * pruning / broadcast / codegen coverage.
   */
 object Explain {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.head
-    val names = if (args.tail.nonEmpty) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit =
+      Args.run("Explain <sfDir> [query...]", args) { a =>
+    val sfDir = a.required(0, "sfDir")
+    val names = if (args.length > 1) args.tail.toSeq
+      else SparkEntry.queries.keys.toSeq.sorted
+    // the session Bench runs, so the printed plans are the measured ones
+    val spark = GraftSession.create(Args.cpus(4))
     // GRAFT_EXPLAIN_MODE=codegen prints generated whole-stage sources —
     // the check that a native expression fused instead of falling back.
     val mode = sys.env.getOrElse("GRAFT_EXPLAIN_MODE", "formatted")

@@ -1,56 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
-import graft.plans.{HyperplaneLshBucket, NgramHashes, NgramMinHash, SimHash64}
-
-/** Cluster-wide deployment hook for graft's native expressions:
+/** Cluster-wide deployment hook for graft's SQL surface:
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * injects the functions into every session's catalog at startup — the
-  * production analogue of [[GraftSession.registerFunctions]] (which covers
-  * ad-hoc/per-session registration).
+  * injects every [[SqlSurface]] function, optimizer rule and planner
+  * strategy into each session at startup — the production twin of
+  * [[GraftSession.registerFunctions]] / [[GraftSession.registerOptimizations]],
+  * reading the same table. A function builder runs at analysis time, in
+  * the session that is active then.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
-
-  private def intLit(e: Expression): Int = e.eval(null) match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case other => throw new IllegalArgumentException(s"expected int literal, got $other")
-  }
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // Whole-operator extension: the broadcast as-of join planner strategy
-    // (logical AsOfJoin -> BroadcastAsOfJoinExec).
-    ext.injectPlannerStrategy(_ => graft.plans.GraftStrategies)
-    // Optimizer rule: binned range-join rewrite (opt-in via
-    // spark.graft.rangeJoin.binWidth; no-op otherwise).
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit SimHash of a string array"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("ngram_minhash"),
-      info("ngram_minhash", "ngram_minhash(tokens, n, k) - k-element MinHash signature over word n-grams"),
-      (exprs: Seq[Expression]) => NgramMinHash(exprs(0), intLit(exprs(1)), intLit(exprs(2)))))
-    ext.injectFunction((FunctionIdentifier("ngram_hashes"),
-      info("ngram_hashes", "ngram_hashes(tokens, n) - distinct 64-bit word n-gram hashes"),
-      (exprs: Seq[Expression]) => NgramHashes(exprs(0), intLit(exprs(1)))))
-    ext.injectFunction((FunctionIdentifier("ngram_hashes_all"),
-      info("ngram_hashes_all", "ngram_hashes_all(tokens, n) - word n-gram hashes with multiplicity"),
-      (exprs: Seq[Expression]) => graft.plans.NgramHashesAll(exprs(0), intLit(exprs(1)))))
-    ext.injectFunction((FunctionIdentifier("lsh_bucket"),
-      info("lsh_bucket", "lsh_bucket(vec, nBits) - random-hyperplane LSH bucket of a float vector"),
-      (exprs: Seq[Expression]) => HyperplaneLshBucket(exprs(0), intLit(exprs(1)), 42L)))
-    ext.injectFunction((FunctionIdentifier("winnow_fingerprints"),
-      info("winnow_fingerprints", "winnow_fingerprints(text, k, w) - winnowing fingerprint hashes (rolling k-gram hash, w-window minima)"),
-      (exprs: Seq[Expression]) => graft.plans.WinnowFingerprints(exprs(0), intLit(exprs(1)), intLit(exprs(2)))))
+    SqlSurface.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    SqlSurface.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
+    SqlSurface.functions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info,
+        (exprs: Seq[Expression]) => f.build(SparkSession.active, exprs)))
+    }
   }
 }

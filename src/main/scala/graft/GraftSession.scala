@@ -1,9 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 import graft.api.GraftFrame
-import graft.plans.{NgramHashes, NgramMinHash, SimHash64, HyperplaneLshBucket}
 
 /** The engine's front door: a tuned SparkSession plus the graft function
   * surface registered for SQL use.
@@ -57,10 +57,22 @@ object GraftSession {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
 
-  def create(master: String = "local[*]"): SparkSession = {
-    val spark = builder(master).getOrCreate()
+  /** The one bootstrap every main uses: [[builder]]'s confs at
+    * `local[cores]` with `cores` shuffle partitions, the SQL surface
+    * registered ([[registerFunctions]], [[registerOptimizations]]), WARN
+    * logging, and a reliable checkpoint directory so iterative operators
+    * land each lineage cut on real storage.
+    */
+  def create(cores: Int = Runtime.getRuntime.availableProcessors): SparkSession = {
+    val spark = builder(s"local[$cores]", cores)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
     registerFunctions(spark)
     registerOptimizations(spark)
+    spark.sparkContext.setLogLevel("WARN")
+    if (spark.sparkContext.getCheckpointDir.isEmpty)
+      spark.sparkContext.setCheckpointDir(
+        java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
     spark
   }
 
@@ -179,219 +191,23 @@ object GraftSession {
     violations
   }
 
-  /** Install graft's optimizer rules on a live session (idempotent).
-    * Currently: the opt-in binned range-join rewrite
-    * ([[graft.plans.RangeJoinRewrite]], enabled by setting
-    * `spark.graft.rangeJoin.binWidth`).
+  /** Install [[SqlSurface]]'s optimizer rules and planner strategies on a
+    * live session (idempotent) — the per-session twin of
+    * [[GraftExtensions]].
     */
-  def registerOptimizations(spark: SparkSession): Unit =
-    org.apache.spark.sql.graftbridge.PlanBridge
-      .addOptimization(spark, graft.plans.RangeJoinRewrite)
+  def registerOptimizations(spark: SparkSession): Unit = {
+    import org.apache.spark.sql.graftbridge.PlanBridge
+    SqlSurface.optimizerRules.foreach(PlanBridge.addOptimization(spark, _))
+    SqlSurface.strategies.foreach(PlanBridge.addStrategy(spark, _))
+  }
 
-  /** Register graft's native expressions in the session's FunctionRegistry
+  /** Register [[SqlSurface]]'s functions in the session's FunctionRegistry
     * so they are callable from SQL text, not just the Scala DSL.
     */
   def registerFunctions(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("ngram_minhash",
-      exprs => NgramMinHash(exprs(0), exprInt(exprs(1)), exprInt(exprs(2))), "scala_udf")
-    reg.createOrReplaceTempFunction("ngram_hashes",
-      exprs => NgramHashes(exprs(0), exprInt(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("ngram_hashes_all",
-      exprs => graft.plans.NgramHashesAll(exprs(0), exprInt(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("lsh_bucket",
-      exprs => HyperplaneLshBucket(exprs(0), exprInt(exprs(1)), 42L), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_signature",
-      exprs => graft.plans.MinHashSignature(exprs(0), exprInt(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("winnow_fingerprints",
-      exprs => graft.plans.WinnowFingerprints(exprs(0), exprInt(exprs(1)), exprInt(exprs(2))), "scala_udf")
-    // md5_prefix_anchors(text, k, byteCutoff) / xx_mod_anchors(text, k,
-    // density): the content-defined anchor selectors behind substring
-    // dedup + span decontamination, from SQL text.
-    reg.createOrReplaceTempFunction("md5_prefix_anchors",
-      exprs => graft.plans.Md5PrefixAnchors(exprs(0), exprInt(exprs(1)), exprInt(exprs(2))), "scala_udf")
-    reg.createOrReplaceTempFunction("xx_mod_anchors",
-      exprs => graft.plans.XxModAnchors(exprs(0), exprInt(exprs(1)), exprInt(exprs(2))), "scala_udf")
-    // bpe_merge_pair(tokens, left, right): one greedy BPE merge pass —
-    // chain in rank order to encode against a trained merge table.
-    reg.createOrReplaceTempFunction("bpe_merge_pair",
-      exprs => graft.plans.BpeMergePair(exprs(0), exprString(exprs(1)), exprString(exprs(2))), "scala_udf")
-    // funnel_reach(events, array(steps...), windowUs): the deep-funnel
-    // per-user kernel from SQL text — events as array<struct<us, t>>,
-    // steps as a foldable string-array literal.
-    reg.createOrReplaceTempFunction("funnel_reach",
-      exprs => graft.plans.FunnelReach(exprs(0),
-        exprStringArray(exprs(1)).toIndexedSeq, exprLong(exprs(2))), "scala_udf")
-    // unigram_viterbi(word, array(pieces...), array(logps...), maxPieceLen):
-    // the unigram-LM segmentation kernel from SQL text — vocabulary rides
-    // as two parallel foldable array literals (plan-time state in the DSL
-    // path too).
-    reg.createOrReplaceTempFunction("unigram_viterbi",
-      exprs => graft.plans.UnigramViterbi(exprs(0),
-        exprStringArray(exprs(1)).toIndexedSeq,
-        exprDoubleArray(exprs(2)).toIndexedSeq, exprInt(exprs(3))), "scala_udf")
-    // argmax_dot(vec, flat_centroids, dim): the IVF/PQ assignment kernel
-    // from SQL text — centroids as a foldable array literal (they are
-    // plan-time literals in the DSL path too, so SQL loses nothing).
-    reg.createOrReplaceTempFunction("argmax_dot",
-      exprs => graft.plans.ArgMaxDot(exprs(0), exprDoubleArray(exprs(1)),
-        exprInt(exprs(2))), "scala_udf")
-    // argmax_dot_exact(vec, flat_centroids, dim): the k-means assignment
-    // kernel (two-phase exact-decimal argmax) from SQL text.
-    reg.createOrReplaceTempFunction("argmax_dot_exact",
-      exprs => graft.plans.ArgMaxDotExact(exprs(0), exprDoubleArray(exprs(1)),
-        exprInt(exprs(2))), "scala_udf")
-    // char_entropy_stats(text) → struct(n, s): the map-side census behind
-    // Corpus.charEntropy; entropy = ln(n) − s/n in plain SQL.
-    reg.createOrReplaceTempFunction("char_entropy_stats",
-      exprs => graft.plans.CharEntropyStats(exprs.head), "scala_udf")
-    // script_profile(text) → struct of Unicode-block counts: the
-    // pre-tokenizer multilingual router from SQL text.
-    reg.createOrReplaceTempFunction("script_profile",
-      exprs => graft.plans.ScriptProfile(exprs.head), "scala_udf")
-    // dot_f(a, b): the single-pass float-array dot kernel — the SQL user's
-    // building block for cosine scoring without the interpreted HOF tax.
-    reg.createOrReplaceTempFunction("dot_f",
-      exprs => graft.plans.DotProductF(exprs(0), exprs(1)), "scala_udf")
-    // multi_match_counts(text, array(phrases...)): the Aho–Corasick
-    // blocklist kernel from SQL text — phrase list as a foldable
-    // string-array literal (plan-time automaton state in the DSL path
-    // too); element i counts phrase i, replace()-count semantics.
-    reg.createOrReplaceTempFunction("multi_match_counts",
-      exprs => graft.plans.MultiMatchCounts(exprs(0),
-        exprStringArray(exprs(1)).toIndexedSeq), "scala_udf")
-    // unicode_normalize(text, 'NFC'|'NFD'|'NFKC'|'NFKD'): the corpus-
-    // hygiene normalizer Spark's builtin surface lacks.
-    reg.createOrReplaceTempFunction("unicode_normalize",
-      exprs => graft.plans.UnicodeNormalize(exprs(0),
-        exprString(exprs(1))), "scala_udf")
-    // mixture_copy_ids(stratum, key, map('en', 2.2, …), defaultWeight):
-    // the DoReMi mixture resample from SQL text — returns the copy-id
-    // array a row contributes (null when it contributes nothing), so the
-    // whole resample is `LATERAL VIEW explode(mixture_copy_ids(...))`.
-    // Weights ride as a foldable map literal (plan-time state in the DSL
-    // path too); the expression tree is built by the SAME code as the
-    // DSL, so SQL and DSL results are identical by construction.
-    reg.createOrReplaceTempFunction("mixture_copy_ids",
-      exprs => org.apache.spark.sql.graftbridge.ColumnBridge.expressionEager(
-        spark,
-        graft.functions.Corpus.mixtureCopyIds(
-          org.apache.spark.sql.graftbridge.ColumnBridge.column(exprs(0)),
-          org.apache.spark.sql.graftbridge.ColumnBridge.column(exprs(1)),
-          exprStringDoubleMap(exprs(2)),
-          exprDouble(exprs(3)))), "scala_udf")
-    // interleaveByWeight / heavyHitters stay DSL-only by design: each is
-    // a multi-stage PLAN (two-level bucket-rank decomposition; two-pass
-    // Misra–Gries sketch + exact recount), not a scalar expression — a
-    // SQL scalar registration would have to hide stages with the wrong
-    // scale shape. The blessed SQL route is the DSL entry point over a
-    // registered view (see README "SQL surface").
-    // StopwordProfileArgmax still carries Seq[Seq[String]] profile state —
-    // exposed through the Scala DSL only.
-  }
-
-  private def exprDouble(e: org.apache.spark.sql.catalyst.expressions.Expression): Double =
-    e.eval(null) match {
-      case d: java.lang.Double => d.doubleValue
-      case f: java.lang.Float => f.doubleValue
-      case i: java.lang.Integer => i.doubleValue
-      case l: java.lang.Long => l.doubleValue
-      case d: org.apache.spark.sql.types.Decimal => d.toDouble
-      case other => throw new IllegalArgumentException(s"expected numeric literal, got $other")
-    }
-
-  /** Evaluate a foldable `map(string, numeric)` literal (SQL `map(…)`). */
-  private def exprStringDoubleMap(
-      e: org.apache.spark.sql.catalyst.expressions.Expression): Map[String, Double] = {
-    require(e.foldable, s"expected a foldable map literal, got $e")
-    val valueType = e.dataType match {
-      case org.apache.spark.sql.types.MapType(org.apache.spark.sql.types.StringType, vt, _) => vt
-      case other => throw new IllegalArgumentException(
-        s"expected map<string, numeric> literal, got ${other.catalogString}")
-    }
-    e.eval(null) match {
-      case m: org.apache.spark.sql.catalyst.util.MapData =>
-        val keys = m.keyArray.toObjectArray(org.apache.spark.sql.types.StringType)
-        val vals = m.valueArray.toObjectArray(valueType)
-        keys.zip(vals).map { case (k, v) =>
-          k.toString -> (v match {
-            case d: java.lang.Double => d.doubleValue
-            case f: java.lang.Float => f.doubleValue
-            case i: java.lang.Integer => i.doubleValue
-            case l: java.lang.Long => l.doubleValue
-            case d: org.apache.spark.sql.types.Decimal => d.toDouble
-            case other => throw new IllegalArgumentException(
-              s"expected numeric map value, got $other")
-          })
-        }.toMap
-      case other => throw new IllegalArgumentException(
-        s"expected map literal, got $other")
-    }
-  }
-
-  private def exprString(e: org.apache.spark.sql.catalyst.expressions.Expression): String =
-    e.eval(null) match {
-      case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-      case other => throw new IllegalArgumentException(s"expected string literal, got $other")
-    }
-
-  private def exprInt(e: org.apache.spark.sql.catalyst.expressions.Expression): Int =
-    e.eval(null) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(s"expected int literal, got $other")
-    }
-
-  private def exprLong(e: org.apache.spark.sql.catalyst.expressions.Expression): Long =
-    e.eval(null) match {
-      case i: Int => i.toLong
-      case l: Long => l
-      case other => throw new IllegalArgumentException(s"expected long literal, got $other")
-    }
-
-  /** Evaluate a foldable string-array argument (SQL `array('a','b')`). */
-  private def exprStringArray(
-      e: org.apache.spark.sql.catalyst.expressions.Expression): Array[String] = {
-    require(e.foldable, s"expected a foldable array literal, got $e")
-    e.eval(null) match {
-      case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-        a.toObjectArray(org.apache.spark.sql.types.StringType).map {
-          case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-          case other => throw new IllegalArgumentException(
-            s"expected string array element, got $other")
-        }
-      case other => throw new IllegalArgumentException(
-        s"expected array literal, got $other")
-    }
-  }
-
-  /** Evaluate a foldable numeric-array argument (SQL `array(…)` literal)
-    * to the flat centroid table [[graft.plans.ArgMaxDot]] expects.
-    */
-  private def exprDoubleArray(
-      e: org.apache.spark.sql.catalyst.expressions.Expression): Array[Double] = {
-    require(e.foldable, s"expected a foldable array literal, got $e")
-    val elemType = e.dataType match {
-      case org.apache.spark.sql.types.ArrayType(t, _) => t
-      case other => throw new IllegalArgumentException(
-        s"expected array literal, got ${other.catalogString}")
-    }
-    e.eval(null) match {
-      case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-        a.toObjectArray(elemType).map {
-          case d: java.lang.Double => d.doubleValue
-          case f: java.lang.Float => f.doubleValue
-          case i: java.lang.Integer => i.doubleValue
-          case l: java.lang.Long => l.doubleValue
-          case d: org.apache.spark.sql.types.Decimal => d.toDouble
-          case other => throw new IllegalArgumentException(
-            s"expected numeric array element, got $other")
-        }
-      case other => throw new IllegalArgumentException(
-        s"expected array literal, got $other")
-    }
+    SqlSurface.functions.foreach(f =>
+      reg.registerFunction(FunctionIdentifier(f.name), f.info, f.build(spark, _)))
   }
 
   /** Read one of the standard tables, normalizing storage quirks (the
@@ -405,10 +221,7 @@ object GraftSession {
     * a plan never leaks into a different session's analyzer.
     */
   def readTable(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // the spread decision is part of the cached plan, so it is part of
-    // the key — a runtime conf flip must not serve the other mode's plan
-    val key = (System.identityHashCode(spark), dir, name,
-      spark.conf.get(ReadSpreadKey, "false"))
+    val key = (System.identityHashCode(spark), dir, name)
     val cached = tableCache.get(key)
     // identity re-check guards the (astronomically unlikely) hash collision
     if (cached != null && (cached._1 eq spark)) cached._2
@@ -418,29 +231,11 @@ object GraftSession {
       // heap. A wholesale clear past the cap is fine — rebuilding is one
       // footer re-read.
       if (tableCache.size >= 256) tableCache.clear()
-      val df = maybeSpread(spark, readTableUncached(spark, dir, name))
+      val df = readTableUncached(spark, dir, name)
       tableCache.put(key, (spark, df))
       df
     }
   }
-
-  /** Conf key: `true` enables [[maybeSpread]]'s read-level
-    * scan-parallelism floor. OFF by default since round 16: a
-    * table-level spread cannot see the consuming query's shape, and the
-    * r16 interleaved A/B showed it taxing every shuffle-heavy consumer
-    * of the same table 1.45–2.9× (x_perplexity 2.03×, x_mkn_nll 2.04×,
-    * x_ivf_append 2.05×, x_novelty 2.85× faster with it off) while the
-    * map-only kernels it was built for are now spread INSIDE the
-    * operators that need it ([[spreadKernelInput]]) — the right
-    * altitude for the decision, and one the sf0.001 oracle gate
-    * actually exercises.
-    */
-  val ReadSpreadKey = "spark.graft.read.spread"
-
-  /** Conf key: `false` disables [[spreadKernelInput]]'s operator-level
-    * scan-parallelism floor (A/B lever).
-    */
-  val KernelSpreadKey = "spark.graft.kernel.spread"
 
   /** Scan-parallelism floor for expensive per-row KERNEL operators
     * (guide §2.5 input skew — "one huge unsplittable file... repartition
@@ -453,42 +248,29 @@ object GraftSession {
     * 0.33× with the spread). Called by those operators on their own
     * input, where the cost shape is KNOWN to be per-row compute — not
     * at the table read, where a blanket spread taxed every
-    * shuffle-dominated consumer of the same table (see [[ReadSpreadKey]]).
-    * No size window: the trigger is purely scan partitions < cores, so
-    * the sf0.001 oracle gate exercises the spread plan, and at real
-    * scale scans arrive with ≫ cores partitions and the branch is
-    * self-disabling — the knnJoinBlocked spread contract.
+    * shuffle-dominated consumer of the same table 1.45–2.9× in the r16
+    * interleaved A/B. No size window: the trigger is purely scan
+    * partitions < cores, so the sf0.001 oracle gate exercises the spread
+    * plan, and at real scale scans arrive with ≫ cores partitions and the
+    * branch is self-disabling — the knnJoinBlocked spread contract.
+    *
+    * An input whose plan holds an exchange or a subquery (an adaptive
+    * plan holds one or the other) is left alone: its partitioning comes
+    * from the shuffle, and asking such a plan for its partition count
+    * runs the upstream stages at build time, only for the action to run
+    * them again. A scan-only plan answers from its file splits.
     */
   private[graft] def spreadKernelInput(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (!spark.conf.get(KernelSpreadKey, "true").toBoolean) df
-    else {
-      val par = spark.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plan = df.queryExecution.executedPlan
+    val shuffled = plan.exists {
+      case _: AdaptiveSparkPlanExec | _: Exchange => true
+      case p => p.subqueries.nonEmpty
     }
-  }
-
-  /** Read-level scan-parallelism floor, opt-in via [[ReadSpreadKey]]
-    * (default off — see there; the operator-level
-    * [[spreadKernelInput]] replaced it as the default mechanism).
-    * The size window bounds the spread to tables worth spreading when
-    * a deployment opts in: below minBytes the extra stage is pure tax
-    * on dimension-table joins, above maxBytes consumers tend to be
-    * shuffle-dominated.
-    */
-  private def maybeSpread(spark: SparkSession, df: DataFrame): DataFrame = {
-    if (!spark.conf.get(ReadSpreadKey, "false").toBoolean) df
-    else {
-      val par = spark.sparkContext.defaultParallelism
-      val minB = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.graft.read.spread.minBytes", "64k"))
-      val maxB = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.graft.read.spread.maxBytes", "1500k"))
-      lazy val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (df.rdd.getNumPartitions < par &&
-          sz >= minB && sz <= maxB) df.repartition(par)
-      else df
-    }
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    if (shuffled || plan.execute().getNumPartitions >= par) df
+    else df.repartition(par)
   }
 
   /** Drop all cached table plans — needed if files under a cached dir are
@@ -497,7 +279,7 @@ object GraftSession {
   def clearTableCache(): Unit = tableCache.clear()
 
   private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, String, String),
+    new java.util.concurrent.ConcurrentHashMap[(Int, String, String),
       (SparkSession, DataFrame)]()
 
   private def readTableUncached(spark: SparkSession, dir: String, name: String): DataFrame =

@@ -1,22 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query timing harness: `runMain graft.Time <sfDir> <name>...`
   * Runs each named SparkEntry query twice (cold + warm) and prints both.
   */
 object Time {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.head
-    val names = if (args.tail.nonEmpty) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit =
+      Args.run("Time <sfDir> [query...]", args) { a =>
+    val sfDir = a.required(0, "sfDir")
+    val names = if (args.length > 1) args.tail.toSeq
+      else SparkEntry.queries.keys.toSeq.sorted
+    val spark = GraftSession.create(Args.cpus(32))
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       (1 to 2).foreach { i =>

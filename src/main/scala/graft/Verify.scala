@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,21 +14,13 @@ object Verify {
     case _                => false
   }
 
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  def main(args: Array[String]): Unit =
+      Args.run("Verify <sfDir> <outDir>", args) { a =>
+    val sfDir = a.required(0, "sfDir")
+    val outDir = a.required(1, "outDir")
     // run under the library's own session defaults (same configs and
     // registered functions/rules a user of GraftSession gets)
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.registerFunctions(spark)
-    GraftSession.registerOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    // reliable-checkpoint dir: iterative ops (connectedComponents) land
-    // each round on real storage instead of executor-lifetime blocks
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    val spark = GraftSession.create(Args.cpus(4))
     new java.io.File(outDir).mkdirs()
     // Fixture-schema smoke check: if the testdata was regenerated with an
     // encoding the adaptive readers can't absorb, say so by column name
@@ -59,7 +50,7 @@ object Verify {
           require(wide.isEmpty,
             s"oracled query '$name' emits int128-class column(s) " +
               s"${wide.mkString(", ")} — narrow to BIGINT at the query edge " +
-              "(SparkEntry.big) and CAST the oracle to BIGINT")
+              "(QueryKit.big) and CAST the oracle to BIGINT")
         }
         res.coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

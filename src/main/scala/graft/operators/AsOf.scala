@@ -109,7 +109,9 @@ object AsOf {
     * join. The left side is never shuffled or sorted. Backed by the
     * custom Catalyst operator [[graft.plans.AsOfJoin]] →
     * [[graft.plans.BroadcastAsOfJoinExec]] (planner strategy
-    * [[graft.plans.GraftStrategies]], auto-registered on the session).
+    * [[graft.plans.GraftStrategies]], installed by both session paths:
+    * [[graft.GraftSession.registerOptimizations]] and
+    * [[graft.GraftExtensions]]).
     *
     * Ordering columns must be integral/timestamp/date (lossless long
     * comparison); key columns must have identical types on both sides.
@@ -120,7 +122,6 @@ object AsOf {
     import org.apache.spark.sql.graftbridge.PlanBridge
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     val spark = left.sparkSession
-    PlanBridge.addStrategy(spark, graft.plans.GraftStrategies)
     // Pre-project the right side so only (key, ts, carried) columns are
     // scanned and collected — column pruning does not cross a custom node.
     val rightMin = right.select((Seq(key, rightTs) ++ rightCols).distinct.map(col): _*)

@@ -9,19 +9,16 @@ package graft.tools
   * Usage: AB <sfDir> <confKey> <valA> <valB> <reps> <query>[,query...]
   */
 object AB {
-  def main(args: Array[String]): Unit = {
-    val Array(dir, key, valA, valB, repsS, qcsv) = args.take(6)
-    val reps = repsS.toInt
-    val names = qcsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftSession.registerFunctions(spark)
-    graft.GraftSession.registerOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+  val Usage = "AB <sfDir> <confKey> <valA> <valB> <reps> <query>[,query...]"
+
+  def main(args: Array[String]): Unit = graft.Args.run(Usage, args) { a =>
+    val dir = a.required(0, "sfDir")
+    val key = a.required(1, "confKey")
+    val valA = a.required(2, "valA")
+    val valB = a.required(3, "valB")
+    val reps = a.int(4, "reps")
+    val names = a.list(5, "query")
+    val spark = graft.GraftSession.create(graft.Args.cpus(32))
     def loadAvg(): Double = math.rint(java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage * 100) / 100
     // warmup

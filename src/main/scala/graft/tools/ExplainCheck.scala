@@ -5,12 +5,9 @@ package graft.tools
   * (`sbt "runMain graft.tools.ExplainCheck x_url_canon x_interpolate"`).
   */
 object ExplainCheck {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.builder("local[4]", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    graft.GraftSession.registerFunctions(spark)
-    graft.GraftSession.registerOptimizations(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit =
+      graft.Args.run("ExplainCheck [query...]", args) { _ =>
+    val spark = graft.GraftSession.create(graft.Args.cpus(4))
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted

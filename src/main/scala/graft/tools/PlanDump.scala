@@ -9,18 +9,14 @@ package graft.tools
   * shapes match the bench; SPARK_GRAFT_CPUS the master width.)
   */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    val Array(outDir, suffix, qcsv) = args.take(3)
-    val names = qcsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  val Usage = "PlanDump <outDir> <suffix> <query>[,query...]"
+
+  def main(args: Array[String]): Unit = graft.Args.run(Usage, args) { a =>
+    val outDir = a.required(0, "outDir")
+    val suffix = a.required(1, "suffix")
+    val names = a.list(2, "query")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    graft.GraftSession.registerFunctions(spark)
-    graft.GraftSession.registerOptimizations(spark)
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    val spark = graft.GraftSession.create(graft.Args.cpus(32))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (q <- names) {
       val df = graft.SparkEntry.queries(q)(spark, dir)

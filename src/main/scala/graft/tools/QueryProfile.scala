@@ -12,19 +12,12 @@ import org.apache.spark.scheduler._
   * Usage: QueryProfile <sfDir> <queryName>[,query2,...] [reps=3]
   */
 object QueryProfile {
-  def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val reps = args.drop(2).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftSession.registerFunctions(spark)
-    graft.GraftSession.registerOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+  def main(args: Array[String]): Unit = graft.Args.run(
+      "QueryProfile <sfDir> <query>[,query...] [reps=3]", args) { a =>
+    val dir = a.required(0, "sfDir")
+    val names = a.list(1, "query")
+    val reps = a.optional(2).fold(3)(_ => a.int(2, "reps"))
+    val spark = graft.GraftSession.create(graft.Args.cpus(32))
 
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, Int)]()
     val cpuNs = new java.util.concurrent.atomic.AtomicLong()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.Similarity
@@ -20,16 +19,10 @@ import graft.functions.Similarity
   * Usage: runMain graft.tools.RecallProbe /root/testdata/sf0.1
   */
 object RecallProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-recall-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit =
+      graft.Args.run("RecallProbe [sfDir]", args) { a =>
+    val dir = a.optional(0).getOrElse("/root/testdata/sf0.01")
+    val spark = graft.GraftSession.create(graft.Args.cpus(8))
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val n = e.count()
     println(s"[probe] $dir embeddings n=$n")

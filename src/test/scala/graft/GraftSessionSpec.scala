@@ -87,6 +87,31 @@ class GraftSessionSpec extends SparkSpec {
     new GraftExtensions()(ext) // would throw on malformed injections
   }
 
+  test("spreadKernelInput: a shuffled input runs no job before the action") {
+    val docs = GraftSession.readTable(spark, sf(), "documents")
+    docs.schema // the table open's own schema job belongs to loading
+    // scan-only input: the one-file scan is spread across the cores
+    val scanPlan = graft.functions.TextFunctions.langIdScored(docs, "doc_id", "text")
+      .queryExecution.executedPlan.toString
+    assert(scanPlan.contains("RoundRobinPartitioning"), scanPlan)
+    val agg = docs.groupBy("doc_id")
+      .agg(org.apache.spark.sql.functions.first("text").as("text"))
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val out =
+      try {
+        val o = graft.functions.TextFunctions.langIdScored(agg, "doc_id", "text")
+        Thread.sleep(1000) // let the async bus surface any job start
+        o
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs == 0, s"building over a post-aggregate input ran $jobs job(s)")
+    assert(out.count() == docs.count())
+  }
+
   test("readTable(events) scopes nanosAsLong to the read, not the session") {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     val before = spark.conf.getOption(key)

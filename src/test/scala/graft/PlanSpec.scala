@@ -15,28 +15,13 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
-  // A Scala Map LITERAL silently keeps the last entry on a duplicate
-  // key — a new query reusing an existing name shadows the old query
-  // AND can mispair query/oracle (the two maps may resolve the dup in
-  // different positions). The Map itself can't witness this, so parse
-  // the source: every declared key must appear EXACTLY once per map.
+  // Each query is one graft.queries.Query record; the registry's index
+  // throws on a repeated name (QueryRegistrySpec), so both derived maps
+  // carry every declared name exactly once.
   test("SparkEntry maps declare every query key exactly once") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    // count source occurrences of each KNOWN query key: a duplicate
-    // declaration survives into the map (last wins), so counting its
-    // literals exposes the shadowed twin the Map can't show
-    // Pattern.quote the key: a name containing a regex metacharacter
-    // (".", "+") must count literally, not as a pattern, or the gate
-    // itself miscounts
-    val dups = SparkEntry.queries.keySet.toSeq.filter { k =>
-      (java.util.regex.Pattern.quote("\"" + k + "\" ->")).r
-        .findAllMatchIn(src).size != 2
-    }
-    // exactly 2 = one queries entry + one oracleSql entry
-    assert(dups.isEmpty,
-      s"keys not declared exactly twice (query + oracle): ${dups.sorted}")
+    assert(SparkEntry.queries.size == graft.queries.Queries.all.size)
+    assert(SparkEntry.queries.size == 280)
+    assert(SparkEntry.oracleSql.values.forall(_.trim.nonEmpty))
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet,
       "queries and oracleSql must cover the same names")
   }

@@ -24,6 +24,9 @@ object SparkSpec {
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // the planner strategies (the broadcast as-of join) and optimizer
+    // rules every graft session installs
+    GraftSession.registerOptimizations(s)
     s
   }
 }
